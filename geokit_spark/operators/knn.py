@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from .. import fixtures
 from ..constants import GRID_N, XSPAN, YSPAN
+from ..session import local_frame
 
 CELL_W = XSPAN / GRID_N
 CELL_H = YSPAN / GRID_N
@@ -59,7 +60,7 @@ def _ring_candidates(spark: SparkSession, queries, radii: dict[int, int]) -> Dat
     rows = [
         (qid, qcells[qid][0], qcells[qid][1], r) for qid, r in radii.items()
     ]
-    qdf = spark.createDataFrame(rows, "query_id int, cx int, cy int, r int")
+    qdf = local_frame(spark, rows, "query_id int, cx int, cy int, r int")
     # one generator per projection: chain the two explodes
     xs = qdf.select(
         "query_id", "cy", "r",
@@ -97,7 +98,7 @@ def knn(
     points). Returns (query_id, rank, doc_id, dist2)."""
     queries = queries if queries is not None else fixtures.POINTS
     qdf_rows = [(q["id"], q["lon"], q["lat"]) for q in queries]
-    qdf = spark.createDataFrame(qdf_rows, "query_id int, qlon double, qlat double")
+    qdf = local_frame(spark, qdf_rows, "query_id int, qlon double, qlat double")
 
     docs_pts = docs_pts.select("doc_id", "lon", "lat", "cell_id")
 
@@ -108,7 +109,8 @@ def knn(
     # rows reach the driver; ring growth is then pure driver
     # arithmetic over the cumulative counts — no repeated scans.
     qcells = _query_cells(queries)
-    qc = spark.createDataFrame(
+    qc = local_frame(
+        spark,
         [(qid, cx, cy) for qid, (cx, cy) in qcells.items()],
         "query_id int, qcx int, qcy int",
     )

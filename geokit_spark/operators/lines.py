@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from .. import fixtures
 from ..kernels.pip import as_rings
+from ..session import local_frame
 
 
 def lines_feature_df(spark: SparkSession, lines=None) -> DataFrame:
@@ -46,8 +47,8 @@ def lines_feature_df(spark: SparkSession, lines=None) -> DataFrame:
         )
         for ln in lines
     ]
-    return spark.createDataFrame(
-        rows, "line_id int, kind string, xs array<double>, ys array<double>"
+    return local_frame(
+        spark, rows, "line_id int, kind string, xs array<double>, ys array<double>"
     )
 
 
@@ -84,8 +85,8 @@ def _edges_df(spark: SparkSession, region) -> DataFrame:
             x1, y1 = v[i]
             x2, y2 = v[(i + 1) % n]
             rows.append((x1, y1, x2, y2))
-    return spark.createDataFrame(
-        rows, "ex1 double, ey1 double, ex2 double, ey2 double"
+    return local_frame(
+        spark, rows, "ex1 double, ey1 double, ex2 double, ey2 double"
     )
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fixtures
+from ..session import local_frame
 
 
 def zones_feature_df(spark: SparkSession, zones=None) -> DataFrame:
@@ -30,7 +31,8 @@ def zones_feature_df(spark: SparkSession, zones=None) -> DataFrame:
         xs = [float(v[0]) for v in z["verts"]]
         ys = [float(v[1]) for v in z["verts"]]
         rows.append((z["zone_id"], z["site_code"], z["year"], z["designate"], xs, ys))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "zone_id int, site_code string, year int, designate string, "
         "xs array<double>, ys array<double>",

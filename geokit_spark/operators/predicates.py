@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures import BOXES
+from ..session import local_frame
 
 
 def boxes_df(spark: SparkSession) -> DataFrame:
@@ -34,8 +35,8 @@ def boxes_df(spark: SparkSession) -> DataFrame:
             (b["name"], b["smart"], float(min(xs)), float(min(ys)),
              float(max(xs)), float(max(ys)))
         )
-    return spark.createDataFrame(
-        rows, "name string, smart int, x0 double, y0 double, x1 double, y1 double"
+    return local_frame(
+        spark, rows, "name string, smart int, x0 double, y0 double, x1 double, y1 double"
     )
 
 

@@ -41,6 +41,7 @@ from ..kernels.cells import (
     classify_subcells,
 )
 from ..kernels.pip import as_rings, points_in_poly_rings
+from ..session import local_frame
 
 # adaptive resolution refinement (north rule): boundary cells of the
 # coarse join grid are re-classified at REFINE x finer resolution, so
@@ -166,7 +167,7 @@ def points_in_polygon(spark: SparkSession, pts: DataFrame, verts) -> DataFrame:
     entirely; only the boundary band reaches Python."""
     from ..functions.geo import pip_literal_col
 
-    cell_df = spark.createDataFrame(_polygon_cells_pdf(verts))
+    cell_df = local_frame(spark, _polygon_cells_pdf(verts))
     keyed = pts.withColumn("cell_id", join_cell_id(F.col("lon"), F.col("lat")))
     joined = keyed.join(F.broadcast(cell_df), "cell_id", "inner")
     if sum(len(_open(r)) for r in as_rings(verts)) <= _JVM_PIP_MAX_VERTS:
@@ -275,7 +276,7 @@ def _points_join_polygons_udf(
 ) -> DataFrame:
     """Complex-ring fallback: the round-1 union shape — interior cells
     JVM-side, the boundary band through pip_multi_udf (Arrow)."""
-    cand = spark.createDataFrame(_poly_candidates_pdf(polys))
+    cand = local_frame(spark, _poly_candidates_pdf(polys))
     keyed = pts.withColumn("cell_id", join_cell_id(F.col("lon"), F.col("lat")))
     pairs = keyed.join(F.broadcast(cand), "cell_id", "inner")
     interior = pairs.filter(F.col("cell_class") == IN).drop("cell_class")
@@ -287,7 +288,7 @@ def _points_join_polygons_udf(
             .filter(exact_udf(F.col("lon"), F.col("lat"), F.col("zone_id")))
         )
         return interior.unionByName(boundary)
-    fine_map = spark.createDataFrame(_poly_fine_pdf(polys))
+    fine_map = local_frame(spark, _poly_fine_pdf(polys))
     bnd = (
         pairs.filter(F.col("cell_class") == BOUNDARY)
         .drop("cell_class")
@@ -336,7 +337,8 @@ def _points_join_polygons_rings_jvm(
             cpdf["cell_class"].to_numpy(), is_b,
         )
     ]
-    cand = spark.createDataFrame(
+    cand = local_frame(
+        spark,
         rows,
         "cell_id long, zone_id int, cell_class int, "
         "_rxs array<array<double>>, _rys array<array<double>>",
@@ -354,7 +356,7 @@ def _points_join_polygons_rings_jvm(
             | ((F.col("cell_class") == BOUNDARY) & exact_jvm)
         ).drop(*drop_aux)
     interior = pairs.filter(F.col("cell_class") == IN).drop(*drop_aux)
-    fine_map = spark.createDataFrame(_poly_fine_pdf(polys))
+    fine_map = local_frame(spark, _poly_fine_pdf(polys))
     bnd = (
         pairs.filter(F.col("cell_class") == BOUNDARY)
         .drop("cell_class")
@@ -433,7 +435,7 @@ def points_join_polygons(
         [y for _, y in opened[int(z)]] if b else None
         for z, b in zip(zid, is_b)
     ]
-    cand = spark.createDataFrame(cpdf)
+    cand = local_frame(spark, cpdf)
     keyed = pts.withColumn("cell_id", join_cell_id(F.col("lon"), F.col("lat")))
     pairs = keyed.join(F.broadcast(cand), "cell_id", "inner")
     drop_aux = ["cell_class", "_pxs", "_pys"]
@@ -453,7 +455,7 @@ def points_join_polygons(
             | ((F.col("cell_class") == BOUNDARY) & exact_jvm)
         ).drop(*drop_aux)
 
-    fine_map = spark.createDataFrame(_poly_fine_pdf(polys))
+    fine_map = local_frame(spark, _poly_fine_pdf(polys))
     bnd = (
         pairs.filter(F.col("cell_class") == BOUNDARY)
         .drop("cell_class")
@@ -479,7 +481,7 @@ def zones_dict(zones=None) -> dict:
 def zone_candidates_df(spark: SparkSession) -> DataFrame:
     """Fixture wrapper kept for callers that want the broadcast
     prefilter side of the aachen-analog zones."""
-    return spark.createDataFrame(_poly_candidates_pdf(zones_dict()))
+    return local_frame(spark, _poly_candidates_pdf(zones_dict()))
 
 
 def docs_join_zones(

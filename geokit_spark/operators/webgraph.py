@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.url import url_path_id
+from ..session import local_frame
 
 DAMP_NUM, DAMP_DEN = 85, 100
 PR_SCALE = 1_000_000
@@ -378,8 +379,8 @@ def filter_blocked_domains(
 
     spark = pages.sparkSession
     bl = F.broadcast(
-        spark.createDataFrame(
-            [(d,) for d in sorted(set(blocklist))], "domain string"
+        local_frame(
+            spark, [(d,) for d in sorted(set(blocklist))], "domain string"
         )
     )
     keyed = pages.withColumn(

@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 
 from .. import fixtures
 from ..kernels.wkb import polygon_wkb, polygon_wkb_area
+from ..session import local_frame
 
 
 def zones_wkb_df(spark: SparkSession) -> DataFrame:
@@ -25,7 +26,8 @@ def zones_wkb_df(spark: SparkSession) -> DataFrame:
          bytearray(polygon_wkb(z["verts"])))
         for z in fixtures.ZONES
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "zone_id int, site_code string, year int, designate string, geom binary",
     )

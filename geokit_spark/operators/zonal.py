@@ -157,8 +157,11 @@ def zonal_stats(tiles: DataFrame, zones=None) -> DataFrame:
         + F.lit(6.0) * mc * mc * (F.col("_c2") / n)
         - F.lit(3.0) * mc * mc * mc * mc
     )
-    skew = mu3 / (mu2 * F.sqrt(mu2))
-    kurt = mu4 / (mu2 * mu2) - F.lit(3.0)
+    # a constant zone has mu2 == 0: NULL skew/kurtosis (what the DuckDB
+    # oracle's x / 0 gives) instead of an ANSI DIVIDE_BY_ZERO
+    flat = mu2 == F.lit(0.0)
+    skew = F.when(~flat, mu3 / (mu2 * F.sqrt(mu2)))
+    kurt = F.when(~flat, mu4 / (mu2 * mu2) - F.lit(3.0))
     return agg.select(
         "zone_id", "n_pix", "sum_v", mean.alias("mean_v"),
         "min_v", "max_v", var.alias("var_v"),

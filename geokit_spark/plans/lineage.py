@@ -29,6 +29,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 CHECKSUM_MOD = 1 << 61
 
 
@@ -80,7 +82,8 @@ class CheckpointTable:
         try:
             return self.spark.read.parquet(self.lineage_path)
         except Exception:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 "stage string, cell_id long, row_count long, "
                 "checksum long, completed_at timestamp",
@@ -108,20 +111,25 @@ class CheckpointTable:
         pending = self.pending_cells(
             stage, work.select(F.col(cell_col).alias("cell_id"))
         )
+        n_cells = pending.count()
+        if n_cells == 0:
+            return 0, 0
+        # persisted: the row count and both writes read the cached rows
+        # instead of each re-running `work` and the anti-join
         todo = work.join(
             F.broadcast(pending.withColumnRenamed("cell_id", cell_col)),
             cell_col,
             "inner",
-        )
-        n_cells = pending.count()
-        if n_cells == 0:
-            return 0, 0
-        data_path = os.path.join(self.root, stage)
-        todo.write.mode("append").parquet(data_path)
-        lin = lineage_rows(todo, stage, cell_col)
-        lin.write.mode("append").parquet(self.lineage_path)
-        rows = todo.count()
-        return n_cells, rows
+        ).persist()
+        try:
+            rows = todo.count()
+            data_path = os.path.join(self.root, stage)
+            todo.write.mode("append").parquet(data_path)
+            lin = lineage_rows(todo, stage, cell_col)
+            lin.write.mode("append").parquet(self.lineage_path)
+            return n_cells, rows
+        finally:
+            todo.unpersist()
 
     def verify_stage(self, stage: str) -> DataFrame:
         """Recompute checksums from the stored data and compare with

@@ -6,7 +6,16 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
+
+# the directory holding the geokit_spark package: workers need it on
+# their path to import the daemon module below and any UDF's module,
+# whatever directory the driver was started from
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -43,12 +52,40 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_MEM", default_mem),
         )
         .config("spark.ui.enabled", "false")
+        # Python workers start from geokit_spark.worker_entry, which
+        # stops each task re-reading Spark's bundled zips (see there)
+        .config("spark.python.daemon.module", "geokit_spark.worker_entry")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, data, schema: str | None = None) -> DataFrame:
+    """A DataFrame from driver-side data, handed to the JVM as Arrow.
+
+    ``data`` is a list of row tuples with a DDL ``schema``, or a pandas
+    DataFrame (``schema`` optional). Spark builds a list, and an empty
+    pandas frame, as a Python RDD: every run of the plan then starts
+    Python tasks and a second pool of workers (a 4-row frame: ~0.2 s
+    wall per run on a 4-vCPU box, ~0.5 s and ~1 s of worker CPU under
+    Spark's own daemon). An Arrow table is parallelised by the JVM (a
+    local relation when small) and starts no Python task. Every frame the package builds on
+    the driver goes through here (tests/test_worker_entry.py checks).
+    """
+    if isinstance(data, pd.DataFrame):
+        table = pa.Table.from_pandas(data, preserve_index=False)
+        return spark.createDataFrame(table, schema)
+    struct = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*data)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names=None) -> dict:

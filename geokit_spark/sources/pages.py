@@ -411,11 +411,12 @@ def extract_text(
     column in decode(, 'UTF-8') skip that expression entirely —
     CollapseProject inlines a decode into EVERY downstream reference
     (the corpus funnel carried 11 copies). Requires the html to be
-    valid UTF-8 (the byte scanner only slices at ASCII delimiters, so
-    it never splits a multi-byte character — invalid input bytes,
-    which the binary path passes through and a JVM decode would
-    replace with U+FFFD, raise here instead). Default stays binary:
-    the byte-exact audit contract."""
+    valid UTF-8 to be byte-exact (the byte scanner only slices at
+    ASCII delimiters, so it never splits a multi-byte character). A
+    batch holding invalid bytes, which the binary path passes through,
+    is decoded row by row with errors="replace" (U+FFFD, as a JVM
+    decode would): a malformed page degrades its own text, not the
+    job. Default stays binary: the byte-exact audit contract."""
     extra = list(passthrough)
     out_type = "string" if as_string else "binary"
 
@@ -431,8 +432,15 @@ def extract_text(
                 extract_main_text(v.as_py() if v.is_valid else b"")
                 for v in html
             ]
+            try:
+                text = pa.array(texts, type=pa_type)
+            except pa.ArrowInvalid:  # as_string and not valid UTF-8
+                text = pa.array(
+                    [t.decode("utf-8", errors="replace") for t in texts],
+                    type=pa_type,
+                )
             yield pa.RecordBatch.from_arrays(
-                [batch.column(0), pa.array(texts, type=pa_type)]
+                [batch.column(0), text]
                 + [batch.column(2 + i) for i in range(len(extra))],
                 ["url", "text_extracted"] + extra,
             )

@@ -135,6 +135,20 @@ def test_extract_text_passthrough(spark):
     assert "Exchange" not in plan
 
 
+def test_extract_text_as_string_replaces_invalid_utf8(spark):
+    """A page with bytes that are not UTF-8 degrades to U+FFFD in its
+    own row; the valid page in the same batch stays byte-exact."""
+    from geokit_spark.session import local_frame
+
+    pages = local_frame(
+        spark,
+        [("u1", b"<p>caf\xe9 ok</p>"), ("u2", "<p>café ok</p>".encode())],
+        "url string, html binary",
+    ).coalesce(1)
+    got = dict(P.extract_text(pages, as_string=True).collect())
+    assert got == {"u1": "caf� ok", "u2": "café ok"}
+
+
 def test_mirror_clusters_domains_vs_revisits(spark):
     """n_domains separates a cross-host mirror (2 domains) from a
     same-site revisit pair (1 domain); singletons are dropped."""

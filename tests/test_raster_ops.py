@@ -87,6 +87,21 @@ def test_zonal_stats_matches_numpy(spark, elev_tiles):
         assert np.isclose(row["kurt_v"], m4 / m2**2 - 3.0, rtol=1e-9)
 
 
+def test_zonal_stats_constant_zone_is_null_moment(spark, elev_tiles):
+    """Every pixel equal -> mu2 == 0. Under ANSI the skew/kurtosis
+    division used to raise DIVIDE_BY_ZERO; the DuckDB oracle's x / 0 is
+    NULL, so the engine returns NULL there too."""
+    import duckdb
+
+    assert duckdb.sql("SELECT 1.0::DOUBLE / 0.0::DOUBLE").fetchone()[0] is None
+    flat = tilesrc.raster_like(spark, elev_tiles, fill=7.0)
+    got = zonal.zonal_stats(flat, fixtures.ZONES[:5]).toPandas()
+    assert len(got) == 5
+    assert (got["min_v"] == 7.0).all() and (got["max_v"] == 7.0).all()
+    assert (got["mean_v"] == 7.0).all() and (got["var_v"] == 0.0).all()
+    assert got["skew_v"].isna().all() and got["kurt_v"].isna().all()
+
+
 def test_rasterize_last_wins(spark, elev_tiles):
     got = (
         rasterize.rasterize_zone_counts(elev_tiles)
